@@ -19,7 +19,6 @@ canonicalizer hashes scalars only (round-1 q44 lesson).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -49,7 +48,11 @@ from e_commerce_lakehouse_spark.operators import (
 )
 from e_commerce_lakehouse_spark.operators import graph as graph_ops
 from e_commerce_lakehouse_spark.operators import sketches as sketch_ops
-from e_commerce_lakehouse_spark.operators.parallelize import spread_for_cpu
+from e_commerce_lakehouse_spark.operators.parallelize import (
+    local_checkpoint_tracked,
+    scan_size_bytes,
+    spread_for_cpu,
+)
 from e_commerce_lakehouse_spark.session import tune_existing
 from e_commerce_lakehouse_spark.streaming import events as stream_events
 from e_commerce_lakehouse_spark.sources import load_table
@@ -1155,10 +1158,6 @@ def _q33_approx_sketches(spark: SparkSession, sf: str) -> DataFrame:
     estimates (one-sided overcounts included) hash-gate EXACTLY
     against the oracle's identical cell construction
     (operators/sketches.py)."""
-    from e_commerce_lakehouse_spark.operators.parallelize import (
-        local_checkpoint_tracked,
-    )
-
     li = load_table(spark, sf, "lineitem")
     p_cents = money.CENTS_SQL.format(x="l_extendedprice")
     # ONE shared (returnflag, linestatus, partkey) count frame can
@@ -1175,13 +1174,12 @@ def _q33_approx_sketches(spark: SparkSession, sf: str) -> DataFrame:
     # 5-scan 3.06 vs shared-frame 3.67 s min over 8 alternated
     # rounds), while at scale five lineitem passes dwarf a
     # part-cardinality-bounded checkpoint.
-    if _scan_size_bytes(li) >= _REUSE_CKPT_MIN_BYTES:
-        rf_part, _ids = local_checkpoint_tracked(
+    if scan_size_bytes(li) >= _REUSE_CKPT_MIN_BYTES:
+        rf_part, _ = local_checkpoint_tracked(
             li.groupBy("l_returnflag", "l_linestatus", "l_partkey").agg(
                 F.count(F.lit(1)).alias("_cnt")
             )
         )
-        buckets.track_pinned(_ids)
     else:
         rf_part = None
     # exact distinct as a TWO-LEVEL group-by, not count(DISTINCT) in
@@ -2286,10 +2284,7 @@ def _q39_ivf_ann(spark: SparkSession, sf: str) -> DataFrame:
     # back-fill one chain's barriers with the other's tasks (guide
     # §2.6 overlap-independent-jobs) instead of serializing ~5 small
     # jobs end to end. The prep frame is materialized ONCE up front so
-    # the session cache is not raced. Thread-safety note: exactly ONE
-    # of the two chains persists RDDs (pq_index's code-frame
-    # checkpoint; sq8 only collects), so local_checkpoint_tracked's
-    # single-persisting-thread id-diff assumption holds.
+    # the session cache is not raced.
     prep = _shared_vec_prep(spark, sf)
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_pq = pool.submit(similarity.pq_index, emb, prep=prep)
@@ -2561,17 +2556,9 @@ def _q45_kmeans_cells(spark: SparkSession, sf: str) -> DataFrame:
 #: the checkpoint's write+barrier. 256 MB of scanned input is far above
 #: every local test SF (sf0.1 embeddings ≈ 1 MB) and far below any
 #: production corpus, so the bench measures the cheap shape and a real
-#: deployment gets the reuse cut. Overridable for tests/tuning via
-#: $SPARK_GRAFT_REUSE_CKPT_MIN_BYTES.
-_REUSE_CKPT_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_REUSE_CKPT_MIN_BYTES", str(1 << 28))
-)
-
-
-def _scan_size_bytes(df: DataFrame) -> int:
-    """Optimizer size estimate of a frame (file-source statistics —
-    derived from parquet file lengths, NO job)."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+#: deployment gets the reuse cut. Tests monkeypatch it to 0 to pin
+#: both shapes result-identical.
+_REUSE_CKPT_MIN_BYTES = 1 << 28
 
 
 def _q46_ann_multiprobe(spark: SparkSession, sf: str) -> DataFrame:
@@ -2596,10 +2583,6 @@ def _q46_ann_multiprobe(spark: SparkSession, sf: str) -> DataFrame:
         same ids (vec_id ↔ doc_id), fused all-integer as
         Σ 1e6 div (60 + rank) over each system's top-20 pool; the
         oracle recomputes both rankings and the fusion arithmetic."""
-    from e_commerce_lakehouse_spark.operators.parallelize import (
-        local_checkpoint_tracked,
-    )
-
     emb = load_table(spark, sf, "embeddings")
     # checkpoint the two rankings that are REFERENCED TWICE: the ann
     # top-k feeds its own output branch AND ranking_quality, and ONE
@@ -2613,13 +2596,11 @@ def _q46_ann_multiprobe(spark: SparkSession, sf: str) -> DataFrame:
     # (same-session A/B at sf0.1: no-ckpt 2.46 vs ckpt 2.71 min over 4
     # alternated rounds, results identical) — the cut pays exactly
     # when the corpus pass is expensive, i.e. at scale. The gate reads
-    # the scan's file-size statistics (no job).
+    # the scan's file-size statistics once (no job).
+    cut = scan_size_bytes(emb) >= _REUSE_CKPT_MIN_BYTES
+
     def _cut(df):
-        if _scan_size_bytes(emb) < _REUSE_CKPT_MIN_BYTES:
-            return df
-        out, _ids = local_checkpoint_tracked(df)
-        buckets.track_pinned(_ids)
-        return out
+        return local_checkpoint_tracked(df)[0] if cut else df
 
     ann = _cut(similarity.ann_topk_multi(emb, query_max_id=10, k=5, planes=8, tables=3))
     exact20 = _cut(similarity.cosine_topk(emb, query_max_id=10, k=20))
@@ -2699,11 +2680,7 @@ def _q47_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     # pagerank's eager chain (edges/nodes/deg checkpoints + the node
     # count) and triangle's (undirected + oriented checkpoints) are
     # independent — submit them from two driver threads so one chain's
-    # barriers back-fill the other's idle tail (guide §2.6). Both
-    # chains use plain localCheckpoint (no tracked id-diff), so the
-    # single-persisting-thread assumption of local_checkpoint_tracked
-    # is not in play (pagerank's tracked round cut only fires past
-    # ckpt_every=8 iterations; this call runs 2).
+    # barriers back-fill the other's idle tail (guide §2.6).
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_pr = pool.submit(graph_ops.pagerank, edges, iters=2)
         f_tri = pool.submit(graph_ops.triangle_counts, edges)

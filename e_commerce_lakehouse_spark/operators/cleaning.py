@@ -41,14 +41,6 @@ def valid_range(df: DataFrame, col: str, lo, hi) -> DataFrame:
     return df.filter(F.col(col).between(lo, hi))
 
 
-def non_null(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """Conjunction of isNotNull guards (silver_clean_transform.py:73,117)."""
-    pred = F.lit(True)
-    for c in cols:
-        pred = pred & F.col(c).isNotNull()
-    return df.filter(pred)
-
-
 def positive(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """(quantity > 0) & (price > 0) guards (silver_clean_transform.py:105)."""
     pred = F.lit(True)

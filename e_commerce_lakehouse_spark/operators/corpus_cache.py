@@ -14,11 +14,12 @@ caller. The real-world analog at cluster scale is a persisted bucketed
 table (the signature index of ``minhash_lsh_incremental``'s docstring);
 localCheckpoint is the single-JVM stand-in with identical semantics.
 
-Lifecycle: block ids are tracked so harnesses that drop leftover
-checkpoint blocks between queries (bench.py) can EXCLUDE live cache
-blocks (``cached_rdd_ids``) and release everything at shutdown
-(``clear``). Keys embed the Spark applicationId, so a new session never
-sees a dead session's frames.
+Lifecycle: each cached frame names its own checkpoint block, so
+harnesses that drop leftover checkpoint blocks between queries
+(bench.py) can EXCLUDE live cache blocks (``cached_rdd_ids``) and
+release everything at shutdown (``clear``);
+``parallelize.release_pinned`` never touches them. Keys embed the Spark
+applicationId, so a new session never sees a dead session's frames.
 """
 
 from __future__ import annotations
@@ -27,10 +28,9 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .parallelize import local_checkpoint_tracked, release_rdds
+from .parallelize import checkpoint_rdd_id, local_checkpoint_tracked, release_rdds
 
 _CACHE: dict[tuple, DataFrame] = {}
-_IDS: dict[tuple, set[int]] = {}
 
 
 def shared_df(
@@ -43,9 +43,8 @@ def shared_df(
     hit = _CACHE.get(full_key)
     if hit is not None:
         return hit
-    df, ids = local_checkpoint_tracked(builder())
+    df, _ = local_checkpoint_tracked(builder())
     _CACHE[full_key] = df
-    _IDS[full_key] = ids
     return df
 
 
@@ -53,11 +52,7 @@ def cached_rdd_ids(spark: SparkSession) -> set[int]:
     """Block ids of live cache entries for this session — harnesses
     subtract these when sweeping leftover checkpoint blocks."""
     app = spark.sparkContext.applicationId
-    out: set[int] = set()
-    for k, ids in _IDS.items():
-        if k[0] == app:
-            out |= ids
-    return out
+    return {checkpoint_rdd_id(df) for k, df in _CACHE.items() if k[0] == app}
 
 
 def clear(spark: SparkSession) -> None:
@@ -65,5 +60,4 @@ def clear(spark: SparkSession) -> None:
     (end-of-run hygiene; also lets tests force cold rebuilds)."""
     app = spark.sparkContext.applicationId
     for k in [k for k in _CACHE if k[0] == app]:
-        release_rdds(spark, _IDS.pop(k, set()))
-        _CACHE.pop(k, None)
+        release_rdds(spark, {checkpoint_rdd_id(_CACHE.pop(k))})

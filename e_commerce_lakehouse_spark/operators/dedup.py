@@ -54,13 +54,6 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
     )
 
 
-def exact_dedup_keep(documents: DataFrame) -> DataFrame:
-    """The deduplicated corpus itself: one row per distinct normalized
-    text (the min-doc_id representative)."""
-    keep = exact_dedup(documents).select(F.col("canonical_doc_id").alias("doc_id"))
-    return documents.join(keep, "doc_id", "left_semi")
-
-
 # ---------------------------------------------------------------------------
 # 2. Exact n-gram / token-set Jaccard
 # ---------------------------------------------------------------------------
@@ -480,19 +473,6 @@ def minhash_sig_udf(num_hashes: int = 16, shingle: int = 3):
     return sm.asNondeterministic()
 
 
-def shingle_set_udf(shingle: int = 3):
-    """text -> array<string> distinct word shingles (the exact-verify
-    side of LSH dedup). Run it on the CANDIDATE doc set only — at scale
-    that's a tiny fraction of the corpus."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<string>")
-    def sh(text: pd.Series) -> pd.Series:
-        return pd.Series([_shingles(t, shingle) for t in text])
-
-    return sh.asNondeterministic()  # see minhash_sig_udf note
-
-
 def minhash_lsh_pairs(
     documents: DataFrame,
     num_hashes: int = 16,
@@ -675,10 +655,9 @@ def minhash_lsh_incremental(
         # cached band index (corpus_cache) pass it via ``banded``
         # (num_hashes/bands/sigs are then ignored — the index fixes them
         # — and the frame must already be materialized).
-        banded, _bids = local_checkpoint_tracked(
+        banded, _ = local_checkpoint_tracked(
             _minhash_banded(sigs, num_hashes, bands)
         )
-        buckets.track_pinned(_bids)
     else:
         _check_banded_schema(banded)
     probe = banded.filter(F.col("doc_id") >= new_min_doc_id).select(
@@ -843,8 +822,7 @@ def simhash_edit_pairs(
     # frame — e.g. corpus_cache.shared_df — so the corpus-wide SimHash
     # kernel runs once per session, not once per query
     if sh is None:
-        sh, _sids = local_checkpoint_tracked(simhash(documents, bits))
-        buckets.track_pinned(_sids)  # index ≡ probe side
+        sh, _ = local_checkpoint_tracked(simhash(documents, bits))  # index ≡ probe side
     banded = sh.select(
         "doc_id",
         F.explode(
@@ -965,7 +943,7 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     superseded checkpoint blocks are released the moment the next
     round's witness materializes.
     """
-    from .parallelize import local_checkpoint_tracked, release_rdds
+    from .parallelize import release_rdds
 
     spark = pairs.sparkSession
     w_u = Window.partitionBy("u")
@@ -987,8 +965,8 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     # The initial witness counts them in the SAME one-job pass that
     # materializes the checkpoint; only when some exist (the rare
     # defensive path) do the initial blocks stay pinned so the
-    # singleton branch can read them at result time (registered with
-    # track_pinned so session sweeps reclaim them) — the common case
+    # singleton branch can read them at result time (tracked like every
+    # checkpoint, so session sweeps reclaim them) — the common case
     # keeps the r5 lifecycle exactly: every superseded round released,
     # one surviving checkpoint.
     canon, c_ids = local_checkpoint_tracked(
@@ -1014,8 +992,6 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     ).first()
     prev = (_first.cnt, _first.s_hi, _first.s_lo)
     loops = canon.filter(~_is_edge) if _first.n_loops else None
-    if loops is not None:
-        buckets.track_pinned(c_ids)
     for _ in range(max_iter):
         # large-star: double the edges, take the whole-partition window
         # min per node, re-point strictly-larger neighbors at it. Output

@@ -80,14 +80,13 @@ def pagerank(
     from .parallelize import local_checkpoint_tracked, release_rdds
 
     spark = edges.sparkSession
-    edges = edges.localCheckpoint()
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select("dst"))
-        .distinct()
-        .localCheckpoint()
+    edges, _ = local_checkpoint_tracked(edges)
+    nodes, _ = local_checkpoint_tracked(
+        edges.select(F.col("src").alias("node")).union(edges.select("dst")).distinct()
     )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).localCheckpoint()
+    deg, _ = local_checkpoint_tracked(
+        edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    )
     n = nodes.count()
     teleport = ((damp_den - damp_num) * scale) // (damp_den * n)
     r = nodes.withColumn("r", F.lit(scale // n))
@@ -156,7 +155,9 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     Returns (node, tri_count) for EVERY node of the undirected graph,
     zeros included.
     """
-    und = undirect(edges).localCheckpoint()
+    from .parallelize import local_checkpoint_tracked
+
+    und, _ = local_checkpoint_tracked(undirect(edges))
     deg = (
         und.select(F.col("lo").alias("node"))
         .union(und.select("hi"))
@@ -175,11 +176,13 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     )
     fwd = F.col("deg_lo") < F.col("deg_hi")
     tie = (F.col("deg_lo") == F.col("deg_hi")) & (F.col("lo") < F.col("hi"))
-    oriented = e.select(
-        F.when(fwd | tie, F.col("lo")).otherwise(F.col("hi")).alias("src"),
-        F.when(fwd | tie, F.col("hi")).otherwise(F.col("lo")).alias("dst"),
-        F.when(fwd | tie, F.col("deg_hi")).otherwise(F.col("deg_lo")).alias("deg_dst"),
-    ).localCheckpoint()
+    oriented, _ = local_checkpoint_tracked(
+        e.select(
+            F.when(fwd | tie, F.col("lo")).otherwise(F.col("hi")).alias("src"),
+            F.when(fwd | tie, F.col("hi")).otherwise(F.col("lo")).alias("dst"),
+            F.when(fwd | tie, F.col("deg_hi")).otherwise(F.col("deg_lo")).alias("deg_dst"),
+        )
+    )
     e1 = oriented.select("src", F.col("dst").alias("v"), F.col("deg_dst").alias("dv"))
     e2 = oriented.select("src", F.col("dst").alias("w"), F.col("deg_dst").alias("dw"))
     wedges = e1.join(e2, "src").filter(

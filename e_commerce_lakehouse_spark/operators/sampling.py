@@ -13,8 +13,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from . import buckets
-
 
 def _hash60(s: Column) -> Column:
     """md5 of a string column, first 15 hex digits as a 60-bit BIGINT —
@@ -481,8 +479,7 @@ def dsir_select(
     from .search import with_fixed_log2_x64
 
     if docb is None:
-        docb, _ids = dsir_doc_buckets(documents, n_buckets)
-        buckets.track_pinned(_ids)
+        docb, _ = dsir_doc_buckets(documents, n_buckets)
     else:
         if docb_n_buckets is None:
             raise ValueError(

@@ -120,9 +120,9 @@ def hyperplane_sketch(
     """
     # deterministic ±1 hyperplanes derived off-plan; the projection runs
     # as one Arrow-batched matmul kernel (band_codes_udf with a single
-    # band packs all sign bits into one code — the sketch). The same
-    # integer math as the sign_bits HOF expression, which runs
-    # interpreted (CodegenFallback) and was the q26 hot spot.
+    # band packs all sign bits into one code — the sketch). A per-plane
+    # HOF sign expression runs interpreted (CodegenFallback) and was
+    # the q26 hot spot.
     # ``dim`` is a parameter (callers know their embedding width) — no
     # driver-side probe job.
     planes_arr = hyperplanes(planes, dim, seed)
@@ -153,7 +153,7 @@ def ann_topk_lsh(
     """
     planes_arr = hyperplanes(planes, dim, seed)
     codes = band_codes_udf(planes_arr, bands=1)
-    side, _sids = local_checkpoint_tracked(
+    side, _ = local_checkpoint_tracked(
         spread_for_cpu(embeddings)
         .select(
             "vec_id",
@@ -162,7 +162,6 @@ def ann_topk_lsh(
             F.element_at(codes("embedding"), 1).alias("sketch"),
         )
     )
-    buckets.track_pinned(_sids)
     q = side.filter(F.col("vec_id") < query_max_id).select(
         F.col("vec_id").alias("query_id"),
         F.col("sketch").alias("q_sketch"),
@@ -229,7 +228,7 @@ def ann_topk_multi(
     # materialize the sketch+vector side ONCE: both the probe build and
     # the corpus side reference it, and a self-join on a UDF-derived
     # frame would otherwise evaluate the Arrow kernel twice
-    side, _sids = local_checkpoint_tracked(
+    side, _ = local_checkpoint_tracked(
         spread_for_cpu(embeddings)
         .select(
             "vec_id",
@@ -238,7 +237,6 @@ def ann_topk_multi(
             codes("embedding").alias("codes"),
         )
     )
-    buckets.track_pinned(_sids)
     # the corpus side carries label+vector THROUGH the bucket join, so
     # the candidate union never re-joins the corpus: the old
     # cand.join(corpus, neighbor_id) shape shuffled the ENTIRE corpus
@@ -318,41 +316,6 @@ def hyperplanes(planes: int, dim: int, seed: int = 7) -> list[list[int]]:
             ]
         )
     return out
-
-
-def _planes_lit(planes_arr: list[list[int]]) -> Column:
-    """All hyperplanes as ONE nested literal array<array<long>> so every
-    projection runs inside a single runtime `transform` loop instead of
-    `planes` unrolled aggregate expressions — unrolling blew codegen up
-    to multi-second compile times for a 2k-row input."""
-    return F.array(
-        *[F.array(*[F.lit(s) for s in row]).cast("array<long>") for row in planes_arr]
-    )
-
-
-def sign_bits(vec_q: Column, planes_arr: list[list[int]]) -> Column:
-    """array<long> of 0/1 sign bits of <v, h_i> for every plane, one
-    nested-loop expression."""
-    return F.transform(
-        _planes_lit(planes_arr),
-        lambda p: F.when(dot_q(vec_q, p) > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        ),
-    )
-
-
-def band_values(vec_q: Column, planes_arr: list[list[int]], bands: int) -> list[Column]:
-    """Split `planes_arr` sign bits into `bands` integer band codes over
-    a quantized vector column. Pure map-side expressions (no shuffle)."""
-    bpb = len(planes_arr) // bands
-    bits = sign_bits(vec_q, planes_arr)
-    vals = []
-    for b in range(bands):
-        v = F.lit(0).cast("long")
-        for j in range(bpb):
-            v = v + F.element_at(bits, b * bpb + j + 1) * F.lit(1 << j).cast("long")
-        vals.append(v)
-    return vals
 
 
 def embedding_neardup_pairs(
@@ -634,13 +597,11 @@ def _kmeans_prep(embeddings: DataFrame) -> DataFrame:
     stage matters more than per-core spread for a small input.
 
     The pinned blocks — the largest internal materialization in this
-    module (the full quantized corpus) — register in the shared release
-    registry, so ``buckets.release_pinned_indexes(spark)`` frees
-    superseded training runs in long-lived sessions instead of leaking
-    them until Python+py4j GC."""
-    out, ids = local_checkpoint_tracked(kmeans_prep_frame(embeddings))
-    buckets.track_pinned(ids)
-    return out
+    module (the full quantized corpus) — are tracked, so
+    ``parallelize.release_pinned(spark)`` frees superseded training
+    runs in long-lived sessions instead of leaking them until
+    Python+py4j GC."""
+    return local_checkpoint_tracked(kmeans_prep_frame(embeddings))[0]
 
 
 def _assign_to_matrix_udf(cells: list[int], cent):
@@ -751,8 +712,6 @@ def kmeans_train_distributed(
     at small k): same vec_id<k seeding, same empty-cell drop, same
     exact integer distances, same floor(double-divide) mean (sums <
     2^53, so the double is exact)."""
-    from .buckets import local_checkpoint_tracked, track_pinned
-
     cent = v.filter(F.col("vec_id") < k).select(
         F.col("vec_id").alias("cell"), F.col("vec").alias("c_vec")
     )
@@ -787,8 +746,7 @@ def kmeans_train_distributed(
                 ).alias("c_vec")
             )
         )
-        cent, _ids = local_checkpoint_tracked(cent, eager=False)
-        track_pinned(_ids)
+        cent = local_checkpoint_tracked(cent, eager=False)[0]
     return cent.select(F.col("cell").alias("centroid_id"), "c_vec")
 
 
@@ -879,15 +837,13 @@ def semdedup(
     a = _assign_to_matrix_udf(cells, cent)
     # one checkpoint feeds the returned assignment and the cell-grouped
     # pairwise pass — without it the assign kernel re-runs per branch.
-    # Pinned blocks go in the shared release registry
-    # (buckets.release_pinned_indexes) so long-lived sessions can sweep
-    # consumed runs.
-    assign_v, _ids = local_checkpoint_tracked(
+    # The pin is tracked (parallelize.release_pinned) so long-lived
+    # sessions can sweep consumed runs.
+    assign_v, _ = local_checkpoint_tracked(
         v.select("vec_id", "vec", a("vec").alias("m")).select(
             "vec_id", "vec", F.col("m.cell").alias("cell"), F.col("m.d2").alias("d2")
         )
     )
-    buckets.track_pinned(_ids)
     assign = assign_v.select("vec_id", "cell", "d2")
 
     def cell_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -932,13 +888,12 @@ def semdedup(
                 }))
         return pd.concat(out) if out else empty
 
-    pairs_full, _pids = local_checkpoint_tracked(
+    pairs_full, _ = local_checkpoint_tracked(
         assign_v.groupBy("cell").applyInPandas(
             cell_pairs,
             "a_id long, b_id long, cell long, cosine double, drop_id long",
         )
     )
-    buckets.track_pinned(_pids)
     pairs = pairs_full.select("a_id", "b_id", "cell", "cosine")
     drops = (
         pairs_full.select(F.col("drop_id").alias("vec_id"), "cell").distinct()
@@ -1140,12 +1095,11 @@ def pq_index(
     packed = " + ".join(
         f"(element_at(codes, {s + 1}) * {1 << (bits * s)})" for s in range(m)
     )
-    coded, _ids = local_checkpoint_tracked(
+    coded, _ = local_checkpoint_tracked(
         v.select("vec_id", codes("vec").alias("codes")).withColumn(
             "pq_code", F.expr(packed)
         )
     )
-    buckets.track_pinned(_ids)
 
     cellarrs = [np.asarray(c, dtype=np.int64) for c in cells]
     cents = [np.asarray(c, dtype=np.int64) for c in cent]

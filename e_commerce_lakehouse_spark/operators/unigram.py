@@ -56,6 +56,7 @@ from pyspark.sql.types import (
 )
 
 from .bpe import word_vocab
+from .parallelize import local_checkpoint_tracked
 
 #: fixed-point scale for expected counts: order-independent integer
 #: sums; resolution 2^-20 per occurrence keeps total error far below
@@ -285,7 +286,7 @@ def train_unigram(
         raise ValueError("em_iters must be >= 1 (pruning needs counts)")
     if not 0.0 < shrink < 1.0:
         raise ValueError(f"shrink must be in (0, 1), got {shrink}")
-    vocab = word_vocab(documents).localCheckpoint()
+    vocab, _ = local_checkpoint_tracked(word_vocab(documents))
     seed = seed_pieces(vocab, max_piece_len, seed_size, min_count)
     total = sum(c for _, c in seed)
     logp = {p: math.log(c) - math.log(total) for p, c in seed}

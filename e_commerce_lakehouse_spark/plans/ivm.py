@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.aggregates import merge_partial_aggregates
+from ..operators.parallelize import local_checkpoint_tracked
 from ..sources import snapshots
 
 # ---------------------------------------------------------------------------
@@ -607,7 +608,7 @@ def refresh_join_view(
         # consumed by up to 3 join terms + the key-prune collect —
         # materialize once instead of re-reading the delta files per
         # consumer
-        return feed.localCheckpoint(eager=False)
+        return local_checkpoint_tracked(feed, eager=False)[0]
 
     def base_for(root, cur, delta, self_changed):
         """The NEW base snapshot, file-skipped to the delta's touched

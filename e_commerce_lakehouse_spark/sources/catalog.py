@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.parallelize import local_checkpoint_tracked
+
 
 def drop_table(spark: SparkSession, name: str) -> None:
     """DROP TABLE IF EXISTS (reference K7)."""
@@ -68,7 +70,9 @@ def append_evolve(spark: SparkSession, df: DataFrame, name: str) -> None:
     if set(existing.columns) == set(df.columns):
         df.select(*existing.columns).write.mode("append").saveAsTable(name)
         return
-    combined = existing.unionByName(df, allowMissingColumns=True).localCheckpoint()
+    combined, _ = local_checkpoint_tracked(
+        existing.unionByName(df, allowMissingColumns=True)
+    )
     create_or_replace(spark, combined, name)
 
 

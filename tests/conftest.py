@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
@@ -11,12 +12,27 @@ from e_commerce_lakehouse_spark.session import build_session  # noqa: E402
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MEDIUM = "/root/testdata/sf0.01"
 
+# the reference repo's batch CSVs, when its checkout sits beside this one
+REFERENCE_BATCH = Path(__file__).resolve().parents[2] / "reference" / "data" / "batch"
+
 
 @pytest.fixture(scope="session")
 def spark():
     spark = build_session(app_name="tests", master="local[4]", shuffle_partitions=4)
     yield spark
     spark.stop()
+
+
+@pytest.fixture(scope="session")
+def ref_csv(tmp_path_factory):
+    """Directory of the six e-commerce batch CSVs: the reference's own
+    sample data when checked out, else the seeded stand-in
+    (tests/ecom_batch.py) with the same sizes and dirty-value classes."""
+    if REFERENCE_BATCH.is_dir():
+        return str(REFERENCE_BATCH)
+    from tests.ecom_batch import write_batch
+
+    return write_batch(str(tmp_path_factory.mktemp("ecom_batch")))
 
 
 def file_spans(path: str, col: str) -> list[int]:

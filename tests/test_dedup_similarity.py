@@ -473,6 +473,82 @@ def test_winnowing_fp_frame_self_describing(spark):
     release_rdds(spark, ids)
 
 
+def test_checkpoint_ids_owned_per_frame_across_threads(spark):
+    """Driver threads checkpoint different frames concurrently: every
+    call returns exactly its own frame's block id (read from the frame,
+    not diffed from the global persistent set), the registry loses no
+    pin, and releasing one thread's pins leaves the other threads'
+    frames readable."""
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from e_commerce_lakehouse_spark.operators.parallelize import (
+        _persistent_rdd_ids,
+        checkpoint_rdd_id,
+        local_checkpoint_tracked,
+        pinned_rdd_ids,
+        release_rdds,
+    )
+
+    workers, rounds = 5, 4
+    barrier = threading.Barrier(workers)
+
+    def worker(tag):
+        out = []
+        for i in range(rounds):
+            df = spark.range(40).select((F.col("id") * workers + tag).alias("v"))
+            barrier.wait(timeout=120)
+            out.append(local_checkpoint_tracked(df, eager=i % 2 == 0))
+        return out
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=workers) as pool:
+            per_worker = list(pool.map(worker, range(workers), timeout=600))
+    finally:
+        sys.setswitchinterval(interval)
+    owned = [[ids for _ck, ids in res] for res in per_worker]
+    for res in per_worker:
+        for ck, ids in res:
+            assert ids == {checkpoint_rdd_id(ck)}
+    all_ids = set().union(*(i for ids in owned for i in ids))
+    assert len(all_ids) == workers * rounds  # no id claimed twice
+    assert all_ids <= pinned_rdd_ids(spark)  # no registry update lost
+    first = set().union(*owned[0])
+    release_rdds(spark, first)
+    assert not first & (_persistent_rdd_ids(spark) | pinned_rdd_ids(spark))
+    for tag, res in enumerate(per_worker[1:], start=1):
+        for ck, _ids in res:
+            assert sorted(r.v for r in ck.collect()) == list(range(tag, 40 * workers, workers))
+    release_rdds(spark, all_ids - first)
+    assert not all_ids & pinned_rdd_ids(spark)
+
+
+def test_checkpoint_rdd_id_rejects_non_checkpoint(spark):
+    """The id reader is loud: a frame whose plan is not a LogicalRDD, a
+    LogicalRDD that was never persisted, and a released checkpoint all
+    raise, naming the running Spark version."""
+    import pytest
+
+    from e_commerce_lakehouse_spark.operators.parallelize import (
+        checkpoint_rdd_id,
+        local_checkpoint_tracked,
+        release_rdds,
+    )
+
+    released, ids = local_checkpoint_tracked(spark.range(5))
+    release_rdds(spark, ids)
+    for df in (
+        spark.range(5),
+        spark.createDataFrame([(1,)], "a int"),
+        released,
+    ):
+        with pytest.raises(RuntimeError, match=spark.version):
+            checkpoint_rdd_id(df)
+
+
 # -- product quantization (PQ) ----------------------------------------------
 
 

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from e_commerce_lakehouse_spark.operators import buckets, dedup, similarity
+from e_commerce_lakehouse_spark.operators import buckets, dedup, parallelize, similarity
 
 CLONES = 10_000
 CLONE_TEXT = "all work and no play makes jack a dull boy " * 3
@@ -172,21 +172,19 @@ def test_grid_cells_hard_bounded(spark):
 
 def test_release_pinned_indexes(spark):
     """Internal materializations are tracked and releasable: after
-    consuming the pairs, release_pinned_indexes drops the pinned
+    consuming the pairs, parallelize.release_pinned drops the pinned
     checkpoint blocks (long-lived-session leak guard)."""
+    before = parallelize.pinned_rdd_ids(spark)
     df = _banded(spark, 100, n_buckets=4)
     pairs = buckets.bucket_mate_pairs(df, ["k"], "doc_id", hot_cap=10)
     pairs.count()
-    assert buckets.pinned_index_blocks()
-    buckets.release_pinned_indexes(spark)
-    assert not buckets.pinned_index_blocks()
-    from e_commerce_lakehouse_spark.operators.parallelize import _persistent_rdd_ids
-
+    pinned = parallelize.pinned_rdd_ids(spark) - before
+    assert pinned
+    assert pinned <= parallelize._persistent_rdd_ids(spark)
+    parallelize.release_pinned(spark)
+    assert not parallelize.pinned_rdd_ids(spark) & pinned
     # none of the previously-pinned ids remain persisted
-    # (other frames may still be pinned by other tests' fixtures)
-    assert not (
-        {b for b in buckets.pinned_index_blocks()} & _persistent_rdd_ids(spark)
-    )
+    assert not pinned & parallelize._persistent_rdd_ids(spark)
 
 
 @pytest.mark.parametrize("seed", [1, 2, 3])

@@ -17,9 +17,6 @@ from e_commerce_lakehouse_spark.plans import ivm, medallion
 from e_commerce_lakehouse_spark.sources import snapshots as S
 from e_commerce_lakehouse_spark.sources.csv import read_csv
 
-REF_CSV = "/root/reference/data/batch"
-
-
 @pytest.fixture()
 def tmpdir():
     d = tempfile.mkdtemp(prefix="ivm_")
@@ -27,10 +24,10 @@ def tmpdir():
     shutil.rmtree(d, ignore_errors=True)
 
 
-def _silver(spark):
+def _silver(spark, ref_csv):
     """Reference CSVs -> silver fact_purchase_event + dim_products."""
     bronze = {
-        name: read_csv(spark, os.path.join(REF_CSV, f"{name}.csv"), schema)
+        name: read_csv(spark, os.path.join(ref_csv, f"{name}.csv"), schema)
         for name, schema in schemas.ECOM_TABLES.items()
     }
     fact = medallion.fact_purchase_event(bronze["orders"], bronze["order_items"])
@@ -45,12 +42,12 @@ def _rows(df):
     )
 
 
-def test_sales_fold_equals_rebuild_across_batches(spark, tmpdir):
+def test_sales_fold_equals_rebuild_across_batches(spark, ref_csv, tmpdir):
     """Three appended batches + one replace_where delete: after every
     refresh, the incrementally-maintained sales_summary equals the
     full rebuild over the fact's current contents — value-exact
     (integer-cents state)."""
-    fact, dim, _ = _silver(spark)
+    fact, dim, _ = _silver(spark, ref_csv)
     fact = fact.cache()
     fact_root = f"{tmpdir}/fact_purchase_event"
     state_root = f"{tmpdir}/gold_sales_state"
@@ -96,11 +93,11 @@ def test_sales_fold_equals_rebuild_across_batches(spark, tmpdir):
     assert info["mode"] == "noop" and info["files_read"] == []
 
 
-def test_refresh_never_scans_base_fact(spark, tmpdir):
+def test_refresh_never_scans_base_fact(spark, ref_csv, tmpdir):
     """Plan gate: an append-batch refresh reads ONLY the appended
     files — both by the manifest set-difference the feed is built from
     and by the feed frame's actual inputFiles()."""
-    fact, _, _ = _silver(spark)
+    fact, _, _ = _silver(spark, ref_csv)
     fact_root = f"{tmpdir}/fact"
     state_root = f"{tmpdir}/state"
 
@@ -132,11 +129,11 @@ def test_refresh_never_scans_base_fact(spark, tmpdir):
     assert set(refreshed["files_read"]) == set(info["added"])
 
 
-def test_vanished_groups_drop_and_review_fold(spark, tmpdir):
+def test_vanished_groups_drop_and_review_fold(spark, ref_csv, tmpdir):
     """Deleting every row of a group removes its state row (signed
     count hits zero), matching the rebuild; review_summary's avg
     derives exactly from the maintained sum+count."""
-    fact, dim, reviews = _silver(spark)
+    fact, dim, reviews = _silver(spark, ref_csv)
     reviews = reviews.cache()
     root = f"{tmpdir}/fact_reviews"
     state_root = f"{tmpdir}/gold_review_state"
@@ -177,7 +174,7 @@ def test_signed_delta_rejects_unknown_change_type(spark):
         ivm.signed_delta_aggregate(feed, ivm.SALES_SPEC).collect()
 
 
-def test_run_incremental_pipeline_end_to_end(spark, tmpdir):
+def test_run_incremental_pipeline_end_to_end(spark, ref_csv, tmpdir):
     """The full medallion wired incrementally: batch 1 = pre-cut CSVs
     (bootstrap), batch 2 = complete CSVs (high-watermark fact APPEND +
     O(delta) gold refresh), batch 3 = re-run (no-op at every layer).
@@ -190,10 +187,10 @@ def test_run_incremental_pipeline_end_to_end(spark, tmpdir):
     early = os.path.join(tmpdir, "csv_early")
     os.makedirs(early)
     for name in ("categories", "products", "users"):
-        _sh.copy(os.path.join(REF_CSV, f"{name}.csv"), early)
+        _sh.copy(os.path.join(ref_csv, f"{name}.csv"), early)
 
     def _filter_csv(name, keep):
-        with open(os.path.join(REF_CSV, f"{name}.csv")) as fh:
+        with open(os.path.join(ref_csv, f"{name}.csv")) as fh:
             rows = list(_csv.DictReader(fh))
         kept = [r for r in rows if keep(r)]
         with open(os.path.join(early, f"{name}.csv"), "w", newline="") as fh:
@@ -232,7 +229,7 @@ def test_run_incremental_pipeline_end_to_end(spark, tmpdir):
 
     _gold_equals_full(early)
 
-    out2 = ivm.run_incremental_pipeline(spark, REF_CSV, wh)
+    out2 = ivm.run_incremental_pipeline(spark, ref_csv, wh)
     assert out2["fact_purchase_event"]["mode"] == "incremental"
     assert out2["sales_summary"]["mode"] == "incremental"
     # the refresh read ONLY the appended files
@@ -245,15 +242,15 @@ def test_run_incremental_pipeline_end_to_end(spark, tmpdir):
         )
     }
     assert set(out2["sales_summary"]["files_read"]).isdisjoint(batch1_files)
-    _gold_equals_full(REF_CSV)
+    _gold_equals_full(ref_csv)
 
-    out3 = ivm.run_incremental_pipeline(spark, REF_CSV, wh)
+    out3 = ivm.run_incremental_pipeline(spark, ref_csv, wh)
     assert out3["fact_purchase_event"]["mode"] == "noop"
     assert out3["sales_summary"]["mode"] == "noop"
-    _gold_equals_full(REF_CSV)
+    _gold_equals_full(ref_csv)
 
 
-def test_streaming_gold_refresh_exactly_once(spark, tmpdir):
+def test_streaming_gold_refresh_exactly_once(spark, ref_csv, tmpdir):
     """foreach_batch_gold_refresh: an availableNow file stream appends
     fact batches and folds gold forward; the result equals the full
     rebuild, and replaying a committed batch (same batch_id) changes
@@ -262,7 +259,7 @@ def test_streaming_gold_refresh_exactly_once(spark, tmpdir):
         foreach_batch_gold_refresh,
     )
 
-    fact, dim, _ = _silver(spark)
+    fact, dim, _ = _silver(spark, ref_csv)
     src_dir = f"{tmpdir}/stream_src"
     fact.filter(F.col("order_id") % 2 == 0).write.parquet(f"{src_dir}/b0")
     fact.filter(F.col("order_id") % 2 == 1).write.parquet(f"{src_dir}/b1")

@@ -15,9 +15,6 @@ from e_commerce_lakehouse_spark.plans import medallion
 from e_commerce_lakehouse_spark.sources import load_table
 from tests.conftest import SF_SMALL
 
-REF_CSV = "/root/reference/data/batch"
-
-
 @pytest.fixture()
 def tmpdir():
     d = tempfile.mkdtemp(prefix="medallion_")
@@ -25,8 +22,8 @@ def tmpdir():
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_full_pipeline_on_reference_data(spark, tmpdir):
-    counts = medallion.run_batch_pipeline(spark, REF_CSV, tmpdir)
+def test_full_pipeline_on_reference_data(spark, ref_csv, tmpdir):
+    counts = medallion.run_batch_pipeline(spark, ref_csv, tmpdir)
     # reference dataset sizes (BASELINE.md)
     assert counts["bronze.categories"] == 13
     assert counts["bronze.products"] == 20_000
@@ -43,8 +40,8 @@ def test_full_pipeline_on_reference_data(spark, tmpdir):
     assert counts["gold.review_summary"] > 0
 
 
-def test_silver_semantics(spark, tmpdir):
-    counts = medallion.run_batch_pipeline(spark, REF_CSV, tmpdir)
+def test_silver_semantics(spark, ref_csv, tmpdir):
+    counts = medallion.run_batch_pipeline(spark, ref_csv, tmpdir)
     dimp = spark.read.parquet(f"{tmpdir}/silver/dim_products")
     # dedup by product_id is total
     assert dimp.count() == dimp.select("product_id").distinct().count()
@@ -63,8 +60,8 @@ def test_silver_semantics(spark, tmpdir):
     assert fr.filter(~F.col("rating").between(1, 5)).count() == 0
 
 
-def test_gold_sales_summary_consistency(spark, tmpdir):
-    medallion.run_batch_pipeline(spark, REF_CSV, tmpdir)
+def test_gold_sales_summary_consistency(spark, ref_csv, tmpdir):
+    medallion.run_batch_pipeline(spark, ref_csv, tmpdir)
     gold = spark.read.parquet(f"{tmpdir}/gold/sales_summary")
     fact = spark.read.parquet(f"{tmpdir}/silver/fact_purchase_event")
     # total purchases across gold == fact rows (no row lost in agg/join)
